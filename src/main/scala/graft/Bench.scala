@@ -575,7 +575,8 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     val (preLoad, contaminated) = waitForIdle(maxLoad, maxWaits, sleepSec = 60)
-    val cores = Runtime.getRuntime.availableProcessors
+    // the local[N] the session really runs on, not the host's core count
+    val cores = if (cpus == "*") Runtime.getRuntime.availableProcessors else cpus.toInt
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-bench")

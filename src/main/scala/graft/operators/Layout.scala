@@ -90,21 +90,7 @@ object Layout {
   def compactSmallFiles(spark: org.apache.spark.sql.SparkSession, path: String,
                         targetFileBytes: Long = 128L << 20): (Int, Int) = {
     require(targetFileBytes > 0L, s"targetFileBytes must be positive, got $targetFileBytes")
-    import org.apache.hadoop.fs.{Path => HPath}
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new HPath(path)
-    val fs = p.getFileSystem(conf)
-    val dataFiles = {
-      val it = fs.listFiles(p, true)
-      val buf = scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.LocatedFileStatus]()
-      while (it.hasNext) {
-        val s = it.next()
-        val n = s.getPath.getName
-        if (s.isFile && n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_"))
-          buf += s
-      }
-      buf.toSeq
-    }
+    val dataFiles = graft.sources.FileTableOps.dataFiles(path, spark.sessionState.newHadoopConf()).toSeq
     require(dataFiles.nonEmpty, s"compactSmallFiles: no data files under $path")
     val totalBytes = dataFiles.map(_.getLen).sum
     val target = math.max(1L, (totalBytes + targetFileBytes - 1L) / targetFileBytes).toInt
@@ -116,7 +102,7 @@ object Layout {
     val dir = java.nio.file.Paths.get(path).getParent
     val tmp = java.nio.file.Paths.get(dir.toString,
       s".tmp_compact_${System.nanoTime()}")
-    spark.read.parquet(path).coalesce(target)
+    graft.sources.ParquetConnector.footerReader(spark, path).parquet(path).coalesce(target)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp.toString)
     graft.sources.FileTableOps.replace(dir.toString, tmp, java.nio.file.Paths.get(path))
     (dataFiles.length, target)

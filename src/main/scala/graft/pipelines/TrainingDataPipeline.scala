@@ -2,7 +2,6 @@ package graft.pipelines
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 import graft.functions.TextFunctions
 import graft.operators.{Curation, Dedup, LanguageModel}
 import graft.plans.{Plan, Reporter}
@@ -1144,22 +1143,13 @@ object TrainingDataPipeline {
         // data-file presence is a DRIVER-side listing (r20): the old
         // `count(t) > 0` guard cost one Spark job per table per tick and
         // only existed to keep compactSmallFiles from throwing on a
-        // zero-data-file dir (an empty-frame write leaves none)
-        .filter { t =>
-          work.tables.contains(t) && {
-            val dir = java.nio.file.Paths.get(workDir, t + ".parquet")
-            val s = java.nio.file.Files.list(dir)
-            try s.iterator().asScala.exists { f =>
-              val n = f.getFileName.toString
-              n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
-            } finally s.close()
-          }
-        }
+        // zero-data-file dir (an empty-frame write leaves none). Same
+        // recursive listing compactSmallFiles counts files with.
+        .filter(t => work.tables.contains(t) && graft.sources.FileTableOps.dataFiles(
+          work.tablePath(t).toString, plan.spark.sessionState.newHadoopConf()).hasNext)
         .foreach { t =>
           val (before, after) = graft.operators.Layout.compactSmallFiles(
-            plan.spark,
-            java.nio.file.Paths.get(workDir, t + ".parquet").toString,
-            targetFileBytes)
+            plan.spark, work.tablePath(t).toString, targetFileBytes)
           plan.logger.info(s"maintenance: $t compacted $before -> $after files")
         }
     }

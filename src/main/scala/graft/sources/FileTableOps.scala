@@ -39,6 +39,31 @@ object FileTableOps {
     Files.deleteIfExists(p)
   }
 
+  /** Spark's file-index rule for names that are not table data: a file
+    * or directory whose name starts with `.`, ends with `._COPYING_`, or
+    * starts with `_` without being a `k=v` partition directory. Spark's
+    * own rule additionally admits the `_metadata` / `_common_metadata`
+    * parquet summaries; those are footers, not data, so they stay hidden
+    * here. */
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
+
+  /** The data files of the table at `root` (a file or a directory): a
+    * recursive driver-side listing that prunes every [[hidden]] name
+    * below the root — the set of files `spark.read` would scan. Lazy:
+    * `hasNext` stops at the first data file. Empty when `root` does not
+    * exist. */
+  def dataFiles(root: String, conf: org.apache.hadoop.conf.Configuration)
+      : Iterator[org.apache.hadoop.fs.FileStatus] = {
+    val p = new org.apache.hadoop.fs.Path(root)
+    val fs = p.getFileSystem(conf)
+    def walk(s: org.apache.hadoop.fs.FileStatus): Iterator[org.apache.hadoop.fs.FileStatus] =
+      if (s.isFile) Iterator.single(s)
+      else fs.listStatus(s.getPath).iterator.filterNot(c => hidden(c.getPath.getName)).flatMap(walk)
+    if (!fs.exists(p)) Iterator.empty else walk(fs.getFileStatus(p))
+  }
+
   /** Table names in `dir` with the given extension, skipping tmp files. */
   def list(dir: String, ext: String): Seq[String] = {
     val d = Paths.get(dir)

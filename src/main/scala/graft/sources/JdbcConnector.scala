@@ -3,6 +3,7 @@ package graft.sources
 import java.sql.{Connection, DriverManager}
 import java.util.Properties
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -15,6 +16,9 @@ import org.apache.spark.sql.types._
   *    table into `numPartitions` range scans executed by executors in
   *    parallel; bounds are fetched with one MIN/MAX round-trip. Arbitrary
   *    SELECT passthrough survives as [[readQuery]].
+  *  - A1/A2 metadata (`mysql.rb:160-168`, `:182-184`): `count`,
+  *    `maxTimestamp` and the read bounds are single statements on a
+  *    driver connection, as in the reference — no Spark job.
   *  - S3 write w/ upsert + evolve (`mysql.rb:55-103`): delete-then-insert
   *    per batch, executed ON THE EXECUTORS via `foreachPartition` with
   *    prepared-statement batching — one `DELETE … WHERE pk IN (…)` plus
@@ -75,6 +79,17 @@ class JdbcConnector(
     try body(c) finally c.close()
   }
 
+  /** One server-side query on a driver connection; `f` reads its first
+    * (for an aggregate, only) result row. */
+  private def queryRow[A](sql: String)(f: java.sql.ResultSet => A): A = withConn { c =>
+    val st = c.createStatement()
+    try {
+      val rs = st.executeQuery(sql)
+      require(rs.next(), s"no result row for: $sql")
+      f(rs)
+    } finally st.close()
+  }
+
   /** T1/T3: execute one statement (DDL/DML) server-side. */
   def exec(sql: String): Unit = withConn { c =>
     val st = c.createStatement()
@@ -92,10 +107,10 @@ class JdbcConnector(
     * the reference's single-threaded page loop. */
   override def read(table: String): DataFrame = partitionColumn match {
     case Some(pc) if exists(table) =>
-      val bounds = readQuery(s"SELECT MIN(${q(pc)}) AS lo, MAX(${q(pc)}) AS hi FROM ${q(table)}").head()
-      if (bounds.isNullAt(0)) spark.read.jdbc(url, q(table), props)
-      else spark.read.jdbc(url, q(table), pc,
-        toLong(bounds.get(0)), toLong(bounds.get(1)), numPartitions, props)
+      val (lo, hi) = queryRow(s"SELECT MIN(${q(pc)}), MAX(${q(pc)}) FROM ${q(table)}")(rs =>
+        (rs.getObject(1), rs.getObject(2)))
+      if (lo == null) spark.read.jdbc(url, q(table), props)
+      else spark.read.jdbc(url, q(table), pc, toLong(lo), toLong(hi), numPartitions, props)
     case _ => spark.read.jdbc(url, q(table), props)
   }
 
@@ -156,7 +171,40 @@ class JdbcConnector(
     * numerically. */
   override def count(table: String): Long =
     if (!exists(table)) 0L
-    else toLong(readQuery(s"SELECT COUNT(1) AS c FROM ${q(table)}").head().get(0))
+    else queryRow(s"SELECT COUNT(1) FROM ${q(table)}")(_.getLong(1))
+
+  /** A2 `SELECT MAX(matcher)` pushed server-side (`mysql.rb:160-168`)
+    * for a TIMESTAMP matcher, with the trait's epoch fallback for a
+    * missing table, a missing column or no non-null value. The value
+    * goes through the same conversion Spark's JDBC reader applies, so it
+    * equals what the Spark path returns. Other matcher types (DATE,
+    * strings) keep the trait's Spark path and its cast semantics. */
+  override def maxTimestamp(table: String, matcher: String): java.sql.Timestamp = {
+    val epoch = new java.sql.Timestamp(0L)
+    columnType(table, matcher) match {
+      case None => epoch
+      case Some(java.sql.Types.TIMESTAMP | java.sql.Types.TIMESTAMP_WITH_TIMEZONE) =>
+        queryRow(s"SELECT MAX(${q(matcher)}) FROM ${q(table)}") { rs =>
+          Option(rs.getTimestamp(1)).fold(epoch)(t =>
+            DateTimeUtils.toJavaTimestamp(DateTimeUtils.fromJavaTimestamp(t)))
+        }
+      case Some(_) => super.maxTimestamp(table, matcher)
+    }
+  }
+
+  /** The `java.sql.Types` code of one column from JDBC metadata; None
+    * when the table or the column does not exist. Names compare exactly
+    * (metadata patterns treat `_` as a wildcard). */
+  private def columnType(table: String, column: String): Option[Int] = withConn { c =>
+    val rs = c.getMetaData.getColumns(null, null, storedName(table), "%")
+    try {
+      var found: Option[Int] = None
+      while (found.isEmpty && rs.next())
+        if (rs.getString("TABLE_NAME") == storedName(table) && rs.getString("COLUMN_NAME") == column)
+          found = Some(rs.getInt("DATA_TYPE"))
+      found
+    } finally rs.close()
+  }
 
   // ---- DDL generation (S4/S5) ----
 

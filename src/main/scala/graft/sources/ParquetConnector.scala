@@ -1,7 +1,14 @@
 package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import scala.jdk.CollectionConverters._
 
 /** Path-addressed parquet "database": each table is `<dir>/<name>.parquet`.
   * Plays the role the MySQL transport plays in the reference
@@ -43,8 +50,9 @@ object ParquetConnector {
     // incremental readSince watermark at scale (PlanEvidenceSpec pins
     // pushdown on the naive-timestamp events table).
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val nanos = nanosAnnotatedColumns(spark, path)
-    val df = spark.read.parquet(path)
+    val footer = firstFooter(spark, path)
+    val nanos = footer.fold(Set.empty[String])(nanosAnnotatedColumns)
+    val df = readerFor(spark, footer).parquet(path)
     import org.apache.spark.sql.functions.{col, expr}
     df.schema.fields.foldLeft(df) { (d, f) =>
       if (nanos.contains(f.name) && f.dataType == org.apache.spark.sql.types.LongType)
@@ -61,60 +69,65 @@ object ParquetConnector {
     }
   }
 
-  /** Columns annotated TIMESTAMP(unit=NANOS) in the parquet footer of the
-    * first data file under `path` — searched RECURSIVELY, so partitioned
-    * (Hive-layout) datasets with files in `col=val/` subdirectories are
-    * detected too (files of one table share a schema). Detection failures
-    * are logged, not swallowed: a silent Set.empty would surface nanos
-    * columns as raw Long. */
-  private def nanosAnnotatedColumns(spark: SparkSession, path: String): Set[String] = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import scala.jdk.CollectionConverters._
-    try {
+  /** `spark.read` carrying the schema `spark.read.parquet(path)` would
+    * infer, built on the driver from the footer of the first data file
+    * under `path`. Spark's own inference reads that same single footer
+    * (files of one table share a schema) but as a one-task Spark job per
+    * read; the footer route submits none. Falls back to inference when
+    * there is no data file (so an empty directory fails exactly as
+    * before) or when schema merging is on. */
+  def footerReader(spark: SparkSession, path: String): DataFrameReader =
+    readerFor(spark, firstFooter(spark, path))
+
+  /** The footer's schema converted exactly as Spark's inference converts
+    * it: the writer's embedded Spark schema when present, else the
+    * parquet schema through a converter configured from the session
+    * (nanos-as-long, NTZ inference, INT96, binary-as-string). */
+  private def readerFor(spark: SparkSession, footer: Option[Footer]): DataFrameReader =
+    footer.fold(spark.read)(f => spark.read.schema(ParquetFileFormat.readSchemaFromFooter(f,
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))))
+
+  /** Footer of the first data file under `path`, searched recursively
+    * (partitioned Hive-layout tables keep their files in `col=val/`
+    * subdirectories; metadata dirs such as the partitioned connector's
+    * `_graft_pkidx` sidecar are skipped). A footer that cannot be read is
+    * logged and answered with None, which leaves the read to Spark's
+    * inference — and so to Spark's own error for a corrupt file. */
+  private def firstFooter(spark: SparkSession, path: String): Option[Footer] =
+    if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+    else try {
       val conf = spark.sessionState.newHadoopConf()
-      val p = new HPath(path)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) return Set.empty
-      val file: Option[HPath] =
-        if (fs.getFileStatus(p).isFile) Some(p)
-        else {
-          // recursive listing; first .parquet data file in any subdir
-          val it = fs.listFiles(p, true)
-          var found: Option[HPath] = None
-          while (found.isEmpty && it.hasNext) {
-            val s = it.next()
-            val n = s.getPath.getName
-            val parent = s.getPath.getParent.getName
-            // skip hidden files AND files inside metadata dirs (e.g. the
-            // partitioned connector's _graft_pkidx pk-hash sidecar) — those
-            // are not data files of this table
-            if (s.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".") &&
-                !parent.startsWith("_") && !parent.startsWith("."))
-              found = Some(s.getPath)
-          }
-          found
-        }
-      file.fold(Set.empty[String]) { f =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-        try {
-          reader.getFooter.getFileMetaData.getSchema.getFields.asScala.collect {
-            case fld if fld.isPrimitive && (fld.getLogicalTypeAnnotation match {
-              case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
-              case _ => false
-            }) => fld.getName
-          }.toSet
-        } finally reader.close()
-      }
+      FileTableOps.dataFiles(path, conf).nextOption()
+        .map(s => new Footer(s.getPath, readFooter(s.getPath, conf)))
     } catch {
       case e: Exception =>
         org.slf4j.LoggerFactory.getLogger(getClass)
-          .warn(s"nanos-timestamp detection failed for $path: ${e.getMessage}")
-        Set.empty
+          .warn(s"parquet footer read failed for $path, inferring the schema instead: ${e.getMessage}")
+        None
     }
+
+  private def readFooter(f: HPath, conf: org.apache.hadoop.conf.Configuration): ParquetMetadata = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+    try reader.getFooter finally reader.close()
+  }
+
+  /** Columns annotated TIMESTAMP(unit=NANOS) in a footer. */
+  private def nanosAnnotatedColumns(footer: Footer): Set[String] =
+    footer.getParquetMetadata.getFileMetaData.getSchema.getFields.asScala.collect {
+      case fld if fld.isPrimitive && (fld.getLogicalTypeAnnotation match {
+        case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+          t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
+        case _ => false
+      }) => fld.getName
+    }.toSet
+
+  /** Total rows of `files`, summed from their footers' row-group counts
+    * — read in parallel on the driver, no Spark job. */
+  private[sources] def footerRowCount(spark: SparkSession, files: Array[String]): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    java.util.Arrays.stream(files).parallel().mapToLong { f =>
+      readFooter(new HPath(new java.net.URI(f)), conf).getBlocks.asScala.map(_.getRowCount).sum
+    }.sum()
   }
 }
 
@@ -132,6 +145,20 @@ class ParquetConnector(val spark: SparkSession, protected val dir: String) exten
     ParquetConnector.readTable(spark, path(table).toString)
 
   override def tables: Seq[String] = FileTableOps.list(dir, ".parquet")
+
+  /** `SELECT COUNT(1)` from the footers: the row-group counts of the
+    * files the table's scan would read, summed on the driver. Beyond
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` files —
+    * Spark's own cutover from driver-side to job-based file work — the
+    * count stays a Spark job. */
+  override def count(table: String): Long =
+    if (!exists(table)) 0L
+    else {
+      val files = read(table).inputFiles
+      if (files.length > spark.sessionState.conf.parallelPartitionDiscoveryThreshold)
+        super.count(table)
+      else ParquetConnector.footerRowCount(spark, files)
+    }
 
   override def exists(table: String): Boolean = Files.exists(path(table))
 

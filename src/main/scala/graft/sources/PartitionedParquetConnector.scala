@@ -156,25 +156,33 @@ class PartitionedParquetConnector(
         // without (or with a mismatched) meta file → next tick treats it
         // as stale and re-bootstraps — never trusts a torn index.
         if (liveIdx.isDefined) invalidateSidecar(table)
+        val before = partitionState(table, affected)
         overwriteDynamic(out, table)
-        // partitions that lost every row write nothing — clear them by hand
-        // (cheap: reads the cached delta, not the table)
-        val written = out.select(col(partCol)).distinct().collect().map(_.getString(0)).toSet
-        (affected -- written).foreach { p =>
-          FileTableOps.deleteRecursively(path(table).resolve(s"$partCol=$p"))
-        }
+        // partitions that lost every row write nothing — clear them by
+        // hand. Every rewritten partition holds new UUID-named files, so
+        // an affected partition whose listing is unchanged by the
+        // overwrite is exactly one that received no rows: a driver-side
+        // listing, no Spark job.
+        val after = partitionState(table, affected)
+        val emptied = before.keySet.filter(p => after.get(p) == before.get(p))
         liveIdx.foreach { _ =>
           // delta-scoped index refresh: dynamic overwrite replaces ONLY
-          // the rebuilt partitions' hash rows (from the cached delta-sized
-          // `out`); emptied partitions' index dirs are deleted; untouched
+          // the rebuilt partitions' hash rows (from the delta-sized `out`);
+          // emptied partitions' index dirs are deleted; untouched
           // partitions' index files are never rewritten — the index
-          // refresh is O(delta), like the merge it mirrors.
+          // refresh is O(delta), like the merge it mirrors. The table
+          // write re-registered `out`'s cache over the table's new
+          // listing, so this re-reads the affected partitions, emptied
+          // ones included: their files must outlive it.
           writeIndexPartitions(indexRows(out, primaryKey), table, dynamic = true)
-          (affected -- written).foreach { p =>
+          emptied.foreach { p =>
             FileTableOps.deleteRecursively(idxPath(table).resolve(s"gpart_v=$p"))
           }
-          commitSidecarMeta(table, primaryKey)
         }
+        emptied.foreach { p =>
+          FileTableOps.deleteRecursively(path(table).resolve(s"$partCol=$p"))
+        }
+        liveIdx.foreach(_ => commitSidecarMeta(table, primaryKey))
       } finally out.unpersist(false)
     } finally inc.unpersist(false)
   }
@@ -209,21 +217,8 @@ class PartitionedParquetConnector(
 
   /** Total data-file bytes of the table — a driver-side listing, the
     * cheap size signal for the index cutover. */
-  private def tableBytes(table: String): Long = {
-    var total = 0L
-    Files.walkFileTree(path(table), new java.nio.file.SimpleFileVisitor[Path] {
-      override def preVisitDirectory(d: Path, a: java.nio.file.attribute.BasicFileAttributes) = {
-        val n = d.getFileName.toString
-        if (n.startsWith("_") || n.startsWith(".")) java.nio.file.FileVisitResult.SKIP_SUBTREE
-        else java.nio.file.FileVisitResult.CONTINUE
-      }
-      override def visitFile(f: Path, a: java.nio.file.attribute.BasicFileAttributes) = {
-        if (f.getFileName.toString.endsWith(".parquet")) total += a.size()
-        java.nio.file.FileVisitResult.CONTINUE
-      }
-    })
-    total
-  }
+  private def tableBytes(table: String): Long =
+    FileTableOps.dataFiles(path(table).toString, spark.sessionState.newHadoopConf()).map(_.getLen).sum
 
   private def idxPath(table: String): Path = path(table).resolve("_graft_pkidx")
 
@@ -233,7 +228,7 @@ class PartitionedParquetConnector(
     * globbing the partition dirs keeps every resolved leaf visible while
     * `basePath` still derives `gpart_v` from the dir names. */
   private def readIndex(table: String): DataFrame =
-    spark.read
+    ParquetConnector.footerReader(spark, idxPath(table).toString)
       .option("basePath", idxPath(table).toString)
       .parquet(idxPath(table).toString + "/gpart_v=*")
       .select(col("h"), col("gpart_v").cast("string").as("gpart_v"))
@@ -292,9 +287,10 @@ class PartitionedParquetConnector(
     * writer UUID, so any rewrite — ours or an external tool's — changes
     * the fingerprint even at identical sizes. Driver-side metadata
     * listing, O(partitions), the same order of work as the partitioned
-    * write's own commit. */
-  private def partitionState(table: String): Map[String, String] =
-    listPartitions(table).map { p =>
+    * write's own commit. `only` restricts it to the named partitions. */
+  private def partitionState(table: String,
+                             only: String => Boolean = _ => true): Map[String, String] =
+    listPartitions(table).filter(only).map { p =>
       val dir = path(table).resolve(s"$partCol=$p")
       val s = Files.list(dir)
       val sig = try s.iterator().asScala

@@ -33,6 +33,36 @@ trait SparkSpec extends AnyFunSuite {
 
   def ts(s: String): java.sql.Timestamp = java.sql.Timestamp.valueOf(s)
 
+  /** `body`'s result and the number of Spark jobs it submitted, counted
+    * by a SparkListener on a local property tag. A tagged fence job run
+    * afterwards proves every earlier job event was delivered (the
+    * listener bus is asynchronous but ordered). */
+  def jobsDuring[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobTag"
+    val tag = s"probe-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val fence = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)).foreach { t =>
+          if (t == tag) jobs.incrementAndGet() else if (t == tag + "-fence") fence.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      def tagged[B](t: String)(b: => B): B = {
+        sc.setLocalProperty(key, t)
+        try b finally sc.setLocalProperty(key, null)
+      }
+      val out = tagged(tag)(body)
+      tagged(tag + "-fence")(sc.parallelize(Seq(1), 1).count())
+      assert(fence.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener fence never arrived")
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** The FIXTURES-style `users` seed: the reference's integration specs
     * run against 5-row seed tables (spec/support/dumps/mysql/
     * forklift_test_source_a.sql) — same shape here. */

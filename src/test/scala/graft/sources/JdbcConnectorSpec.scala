@@ -116,6 +116,49 @@ class JdbcConnectorSpec extends SparkSpec {
     assert(c.maxTimestamp("users", "updated_at") == ts("2024-01-05 12:00:00"))
   }
 
+  /** The trait's Spark-path watermark (`Connector.maxTimestamp`), the
+    * reference the server-side override must agree with. */
+  private def sparkMax(c: JdbcConnector, table: String, matcher: String): java.sql.Timestamp = {
+    val r = c.read(table).agg(max(col(matcher)).cast("timestamp")).head()
+    if (r.isNullAt(0)) new java.sql.Timestamp(0L) else r.getTimestamp(0)
+  }
+
+  test("maxTimestamp epoch fallback: missing table, missing column, all-null column (A2)") {
+    val c = fresh()
+    c.write(usersDf.withColumn("deleted_at", lit(null).cast("timestamp")), "users", SaveMode.Append)
+    assert(c.maxTimestamp("no_such_table", "updated_at").getTime == 0L)
+    assert(c.maxTimestamp("users", "no_such_col").getTime == 0L)
+    assert(c.maxTimestamp("users", "deleted_at").getTime == 0L)
+    c.truncate("users")
+    assert(c.maxTimestamp("users", "updated_at").getTime == 0L)
+  }
+
+  test("maxTimestamp on a TIMESTAMP column is server-side and equals the Spark path (UTC session)") {
+    val c = fresh()
+    val rows = usersDf.withColumn("updated_at",
+      when(col("id") === 4L, lit(ts("2024-03-07 23:59:58.123456"))).otherwise(col("updated_at")))
+    c.write(rows, "users", SaveMode.Append)
+    val (wm, jobs) = jobsDuring(c.maxTimestamp("users", "updated_at"))
+    assert(jobs == 0)
+    assert(wm == ts("2024-03-07 23:59:58.123456"))
+    assert(wm == sparkMax(c, "users", "updated_at"))
+  }
+
+  test("maxTimestamp on a DATE or string matcher falls back to the Spark path") {
+    val c = fresh()
+    c.execScript(
+      """CREATE TABLE "dated" ("id" BIGINT, "d" DATE, "s" VARCHAR(32));
+        |INSERT INTO "dated" VALUES (1, DATE('2024-02-01'), '2024-02-01 10:00:00');
+        |INSERT INTO "dated" VALUES (2, DATE('2024-02-03'), '2024-02-03 11:30:00');""".stripMargin)
+    for (m <- Seq("d", "s")) {
+      val (wm, jobs) = jobsDuring(c.maxTimestamp("dated", m))
+      assert(jobs >= 1, s"$m must take the Spark path")
+      assert(wm == sparkMax(c, "dated", m))
+    }
+    assert(c.maxTimestamp("dated", "d") == ts("2024-02-03 00:00:00"))
+    assert(c.maxTimestamp("dated", "s") == ts("2024-02-03 11:30:00"))
+  }
+
   test("execScript runs DELIMITER-aware multi-statement DDL (T3)") {
     val c = fresh()
     c.execScript(

@@ -16,11 +16,21 @@ for t in ['region','nation','customer','supplier','part','orders','lineitem','ev
 
 import os
 oracles = json.load(open(f'{outdir}/oracle_sql.json'))
+# graft.Verify's manifest: whether it ran a name-filtered pass, and which
+# queries threw. Without one (an older dump) the run counts as unfiltered.
+manifest_path = f'{outdir}/verify_manifest.json'
+manifest = json.load(open(manifest_path)) if os.path.exists(manifest_path) else {}
+filtered = manifest.get('filtered', False)
+threw = manifest.get('failed', {})
 ok, bad = [], []
 skipped = 0
 for name, sql in sorted(oracles.items()):
+    if name in threw:
+        bad.append((name, f"Verify threw: {threw[name]}")); continue
     if not os.path.isdir(f'{outdir}/{name}'):
-        skipped += 1; continue  # query not run in this (filtered) Verify pass
+        if filtered:
+            skipped += 1; continue  # query not run in this filtered Verify pass
+        bad.append((name, "no output (missing from an unfiltered Verify pass)")); continue
     try:
         exp = con.execute(sql).fetch_arrow_table()
         got = duckdb.connect().execute(f"SELECT * FROM read_parquet('{outdir}/{name}/*.parquet')").fetch_arrow_table()
@@ -75,6 +85,10 @@ for name, sql in sorted(oracles.items()):
             ok.append((name, len(e)))
     except Exception as ex:
         bad.append((name, f"EXC: {ex}"))
+
+for name in sorted(threw):
+    if name not in oracles:
+        bad.append((name, f"Verify threw (no oracle): {threw[name]}"))
 
 # rows-only queries (no oracle): just report counts
 rows_only = [d for d in sorted(os.listdir(outdir))
