@@ -51,7 +51,12 @@ object FileTableOps {
 
   /** The data files of the table at `root` (a file or a directory): a
     * recursive driver-side listing that prunes every [[hidden]] name
-    * below the root — the set of files `spark.read` would scan. Lazy:
+    * below the root — the set of files `spark.read` would scan — in
+    * ascending full-path order, the order Spark's schema inference sorts
+    * leaf files into before it reads the first footer. Each directory's
+    * entries are sorted by name, with a `/` appended to directory names:
+    * that key orders children exactly as the full paths beneath them
+    * compare, so a depth-first walk yields the global path order. Lazy:
     * `hasNext` stops at the first data file. Empty when `root` does not
     * exist. */
   def dataFiles(root: String, conf: org.apache.hadoop.conf.Configuration)
@@ -60,7 +65,9 @@ object FileTableOps {
     val fs = p.getFileSystem(conf)
     def walk(s: org.apache.hadoop.fs.FileStatus): Iterator[org.apache.hadoop.fs.FileStatus] =
       if (s.isFile) Iterator.single(s)
-      else fs.listStatus(s.getPath).iterator.filterNot(c => hidden(c.getPath.getName)).flatMap(walk)
+      else fs.listStatus(s.getPath).filterNot(c => hidden(c.getPath.getName))
+        .sortBy(c => if (c.isDirectory) c.getPath.getName + "/" else c.getPath.getName)
+        .iterator.flatMap(walk)
     if (!fs.exists(p)) Iterator.empty else walk(fs.getFileStatus(p))
   }
 

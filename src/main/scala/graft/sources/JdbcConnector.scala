@@ -5,6 +5,7 @@ import java.util.Properties
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.jdbc.JdbcDialects
 import org.apache.spark.sql.types._
 
 /** JDBC source/sink — the Spark re-expression of the reference's MySQL
@@ -175,34 +176,41 @@ class JdbcConnector(
 
   /** A2 `SELECT MAX(matcher)` pushed server-side (`mysql.rb:160-168`)
     * for a TIMESTAMP matcher, with the trait's epoch fallback for a
-    * missing table, a missing column or no non-null value. The value
-    * goes through the same conversion Spark's JDBC reader applies, so it
-    * equals what the Spark path returns. Other matcher types (DATE,
-    * strings) keep the trait's Spark path and its cast semantics. */
+    * missing column or no non-null value. The value goes through the
+    * conversions Spark's JDBC reader applies (the dialect's, then
+    * Spark's internal micros), so it equals what the Spark path returns.
+    * Everything else keeps the trait's Spark path: other matcher types
+    * (DATE, strings) for their cast semantics, and a table that is not
+    * stored under exactly this name (missing, or matched by `exists` only
+    * case-insensitively) for its `exists`/`read` behavior. */
   override def maxTimestamp(table: String, matcher: String): java.sql.Timestamp = {
     val epoch = new java.sql.Timestamp(0L)
-    columnType(table, matcher) match {
+    val types = columnTypes(table)
+    if (types.isEmpty) super.maxTimestamp(table, matcher)
+    else types.get(matcher) match {
       case None => epoch
       case Some(java.sql.Types.TIMESTAMP | java.sql.Types.TIMESTAMP_WITH_TIMEZONE) =>
+        val dialect = JdbcDialects.get(url)
         queryRow(s"SELECT MAX(${q(matcher)}) FROM ${q(table)}") { rs =>
           Option(rs.getTimestamp(1)).fold(epoch)(t =>
-            DateTimeUtils.toJavaTimestamp(DateTimeUtils.fromJavaTimestamp(t)))
+            DateTimeUtils.toJavaTimestamp(DateTimeUtils.fromJavaTimestamp(
+              dialect.convertJavaTimestampToTimestamp(t))))
         }
       case Some(_) => super.maxTimestamp(table, matcher)
     }
   }
 
-  /** The `java.sql.Types` code of one column from JDBC metadata; None
-    * when the table or the column does not exist. Names compare exactly
-    * (metadata patterns treat `_` as a wildcard). */
-  private def columnType(table: String, column: String): Option[Int] = withConn { c =>
+  /** Column name → `java.sql.Types` code of the table stored under
+    * exactly `table`, from JDBC metadata; empty when there is none.
+    * Names compare exactly (metadata patterns treat `_` as a wildcard). */
+  private def columnTypes(table: String): Map[String, Int] = withConn { c =>
     val rs = c.getMetaData.getColumns(null, null, storedName(table), "%")
     try {
-      var found: Option[Int] = None
-      while (found.isEmpty && rs.next())
-        if (rs.getString("TABLE_NAME") == storedName(table) && rs.getString("COLUMN_NAME") == column)
-          found = Some(rs.getInt("DATA_TYPE"))
-      found
+      val b = Map.newBuilder[String, Int]
+      while (rs.next())
+        if (rs.getString("TABLE_NAME") == storedName(table))
+          b += rs.getString("COLUMN_NAME") -> rs.getInt("DATA_TYPE")
+      b.result()
     } finally rs.close()
   }
 

@@ -71,9 +71,9 @@ object ParquetConnector {
 
   /** `spark.read` carrying the schema `spark.read.parquet(path)` would
     * infer, built on the driver from the footer of the first data file
-    * under `path`. Spark's own inference reads that same single footer
-    * (files of one table share a schema) but as a one-task Spark job per
-    * read; the footer route submits none. Falls back to inference when
+    * under `path` in path order. Spark's own inference reads that same
+    * single footer but as a one-task Spark job per read; the footer route
+    * submits none. Falls back to inference when
     * there is no data file (so an empty directory fails exactly as
     * before) or when schema merging is on. */
   def footerReader(spark: SparkSession, path: String): DataFrameReader =
@@ -87,7 +87,8 @@ object ParquetConnector {
     footer.fold(spark.read)(f => spark.read.schema(ParquetFileFormat.readSchemaFromFooter(f,
       new ParquetToSparkSchemaConverter(spark.sessionState.conf))))
 
-  /** Footer of the first data file under `path`, searched recursively
+  /** Footer of the first data file under `path` in path order — the file
+    * Spark's inference would pick — searched recursively
     * (partitioned Hive-layout tables keep their files in `col=val/`
     * subdirectories; metadata dirs such as the partitioned connector's
     * `_graft_pkidx` sidecar are skipped). A footer that cannot be read is
@@ -147,18 +148,10 @@ class ParquetConnector(val spark: SparkSession, protected val dir: String) exten
   override def tables: Seq[String] = FileTableOps.list(dir, ".parquet")
 
   /** `SELECT COUNT(1)` from the footers: the row-group counts of the
-    * files the table's scan would read, summed on the driver. Beyond
-    * `spark.sql.sources.parallelPartitionDiscovery.threshold` files —
-    * Spark's own cutover from driver-side to job-based file work — the
-    * count stays a Spark job. */
+    * files the table's scan would read, summed on the driver. */
   override def count(table: String): Long =
     if (!exists(table)) 0L
-    else {
-      val files = read(table).inputFiles
-      if (files.length > spark.sessionState.conf.parallelPartitionDiscoveryThreshold)
-        super.count(table)
-      else ParquetConnector.footerRowCount(spark, files)
-    }
+    else ParquetConnector.footerRowCount(spark, read(table).inputFiles)
 
   override def exists(table: String): Boolean = Files.exists(path(table))
 

@@ -8,7 +8,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{MessageTypeParser, PrimitiveType}
-import org.apache.spark.sql.{AnalysisException, SaveMode}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -107,6 +107,50 @@ class ConnectorMetadataSpec extends SparkSpec {
     assert(SchemaInfer.logicalType(c.read("users").schema("later")) == NullType)
   }
 
+  /** A table directory holding one single-file write of each frame:
+    * `first`'s file sorts first by path. The files are created in the
+    * opposite order, so a listing in creation order disagrees with path
+    * order. */
+  private def twoFileTable(first: DataFrame, second: DataFrame): String = {
+    val table = Files.createDirectories(Paths.get(tmpDir("graft_fs_two_"), "t.parquet"))
+    for ((frame, name) <- Seq(second -> "part-1.parquet", first -> "part-0.parquet")) {
+      val staging = tmpDir("graft_fs_stage_")
+      frame.coalesce(1).write.mode(SaveMode.Overwrite).parquet(staging)
+      val file = FileTableOps.dataFiles(staging, spark.sessionState.newHadoopConf()).next().getPath
+      Files.move(Paths.get(file.toUri), table.resolve(name))
+    }
+    table.toString
+  }
+
+  test("footer schema = inferred schema: files differing only in the sentinel tag") {
+    val tagged = usersDf.withColumn("later", lit(null))
+    val taggedOut = SchemaInfer.evolve(tagged, tagged.schema)
+    val plain = usersDf.withColumn("later", when(col("id") > 2L, lit("x")))
+    val taggedFirst = twoFileTable(taggedOut, plain)
+    val plainFirst = twoFileTable(plain, taggedOut)
+    assert(inferred(taggedFirst)("later").metadata != inferred(plainFirst)("later").metadata,
+      "fixture: the first file in path order must decide the inferred schema")
+    assertFooterSchema(taggedFirst)
+    assertFooterSchema(plainFirst)
+    assert(SchemaInfer.logicalType(ParquetConnector.readTable(spark, taggedFirst).schema("later")) == NullType)
+    assert(SchemaInfer.logicalType(ParquetConnector.readTable(spark, plainFirst).schema("later")) == StringType)
+  }
+
+  test("dataFiles lists data files in full-path order and skips hidden names") {
+    val root = Paths.get(tmpDir("graft_fs_order_"), "t.parquet")
+    val data = Seq("part-b", "part-a", "part-a.x", "k=1/f", "k=10/f", "k=1.5/f", "k=1/g", "_k=2/f",
+      "k=2/sub/f", "k=2/sub.x")
+    val hiddenNames = Seq("_SUCCESS", ".part-a.crc", "part-c._COPYING_", "_graft_pkidx/f", "k=1/.f.crc")
+    for (n <- (data ++ hiddenNames).reverse) {
+      val f = root.resolve(n)
+      Files.createDirectories(f.getParent)
+      Files.createFile(f)
+    }
+    val listed = FileTableOps.dataFiles(root.toString, spark.sessionState.newHadoopConf())
+      .map(_.getPath.toUri.getPath).toSeq
+    assert(listed == data.map(n => root.resolve(n).toString).sorted)
+  }
+
   test("a directory with no data files takes the inference fallback") {
     val dir = Files.createDirectories(Paths.get(tmpDir("graft_fs_empty_"), "t.parquet"))
     Files.createFile(dir.resolve("_SUCCESS"))
@@ -131,27 +175,12 @@ class ConnectorMetadataSpec extends SparkSpec {
     assert(jobsDuring(spark.read.parquet(c.tablePath("users").toString))._2 >= 1)
   }
 
-  test("count beyond the listing threshold keeps the Spark count") {
-    val c = new ParquetConnector(spark, tmpDir("graft_fs_many_"))
-    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    c.write(usersDf.repartition(3), "users")
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "1")
-    try {
-      val (n, jobs) = jobsDuring(c.count("users"))
-      assert(n == 5L && jobs >= 1)
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
-  test("job counter: JdbcConnector.maxTimestamp and count submit no Spark job") {
+  test("job counter: JdbcConnector.count and the partitioned read's bounds submit no Spark job") {
     val c = new JdbcConnector(spark, "jdbc:derby:memory:graft_meta_jobs;create=true",
       partitionColumn = Some("id"), numPartitions = 2)
     c.write(usersDf, "users", SaveMode.Append)
-    val (wm, wmJobs) = jobsDuring(c.maxTimestamp("users", "updated_at"))
-    assert(wm == ts("2024-01-05 12:00:00") && wmJobs == 0)
     val (n, countJobs) = jobsDuring(c.count("users"))
     assert(n == 5L && countJobs == 0)
-    // the partitioned read's bounds are a server-side statement too
     val (scan, readJobs) = jobsDuring(c.read("users"))
     assert(readJobs == 0 && scan.rdd.getNumPartitions == 2)
   }

@@ -159,6 +159,19 @@ class JdbcConnectorSpec extends SparkSpec {
     assert(c.maxTimestamp("dated", "s") == ts("2024-02-03 11:30:00"))
   }
 
+  test("maxTimestamp on a table matched only case-insensitively takes the Spark path, not epoch") {
+    val c = fresh()
+    c.execScript(
+      """CREATE TABLE folded (id BIGINT, updated_at TIMESTAMP);
+        |INSERT INTO folded VALUES (1, TIMESTAMP('2024-02-03 11:30:00'));""".stripMargin)
+    assert(c.exists("folded"), "exists ignores case; the table is stored as FOLDED")
+    val (wm, jobs) = jobsDuring(c.maxTimestamp("FOLDED", "UPDATED_AT"))
+    assert(wm == ts("2024-02-03 11:30:00") && jobs == 0)
+    // epoch here would mean a silent full re-import; the trait's quoted
+    // read fails visibly instead
+    intercept[java.sql.SQLException](c.maxTimestamp("folded", "UPDATED_AT"))
+  }
+
   test("execScript runs DELIMITER-aware multi-statement DDL (T3)") {
     val c = fresh()
     c.execScript(
